@@ -23,7 +23,7 @@ Stages (each output lands under --output for auditability):
                   lines keep only their first occurrence
   5. chunk        surviving docs -> overlapping training windows
 
-Every stage is DataFrame-native (mapInPandas only inside extraction);
+Every stage is DataFrame-native (a Python map only inside extraction);
 at cluster scale the shuffles are: extraction none, dedup's LSH band
 join + label propagation, chunking none.
 """

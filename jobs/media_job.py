@@ -26,10 +26,10 @@ Outputs under --output:
                 per-format decision (resumed runs replay it)
 plus ONE summary JSON line on stdout.
 
-Scale shape: payload extraction is the one mapInPandas pass; the
+Scale shape: payload extraction is the one Python map pass; the
 policy costs one per-format aggregate over magic-sniffed heads plus
 sample_per_format driver-side decode timings (plans/salting.py's
-scalar-collect class); features are a second mapInPandas pass over
+scalar-collect class); features are a second Python map pass over
 the persisted payload table (never recomputed from the PDFs).
 """
 

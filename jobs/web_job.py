@@ -6,7 +6,7 @@ resumable spark-submit surface (the PDF leg is jobs/extract_job.py).
         --output /data/web_docs \
         --batches 8                     (checkpoint slices)
 
-Pipeline: scan -> checkpointed per-slice extraction (ONE mapInPandas
+Pipeline: scan -> checkpointed per-slice extraction (ONE Python map
 pass per slice: boilerplate-stripped main_text + title + metadata
 scalars + outlinks + heading outline + table shapes + n_bytes +
 error quarantine) -> host-level link-graph aggregate.

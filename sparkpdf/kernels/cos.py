@@ -97,8 +97,6 @@ _WS_COMMENT = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
 # (reference IndirectPattern, generic.py:90)
 _INDIRECT = re.compile(rb"(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+R(?![0-9A-Za-z])")
 
-_NUMBER = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
-
 # a name runs to the next whitespace or delimiter (generic.py:731-734);
 # '#' escapes are kept RAW for parity with the reference fork, which does
 # not decode them (generic.py:751-757)
@@ -219,23 +217,6 @@ def make_string(raw: bytes):
         except UnicodeDecodeError:
             return raw
     return raw
-
-
-def parse_number(buf: bytes, pos: int):
-    m = _NUMBER.match(buf, pos)
-    if not m:
-        raise PdfError(f"expected number at {pos}")
-    tok = m.group()
-    if b"." in tok:
-        try:
-            val = float(tok)
-        except ValueError:  # malformed real -> 0 (generic.py:396-399)
-            val = 0.0
-        return val, m.end()
-    try:
-        return int(tok), m.end()
-    except ValueError:  # overflow -> 0 (generic.py:423-428)
-        return 0, m.end()
 
 
 def parse_name(buf: bytes, pos: int) -> Tuple[Name, int]:

@@ -192,10 +192,6 @@ def _norm(name: str) -> str:
     return name[1:] if name.startswith("/") else name
 
 
-def table_for(name: str) -> Optional[List[str]]:
-    return _TABLES.get(_norm(name))
-
-
 def decode_builtin(data: bytes, encoding_name: str) -> str:
     """Byte-string -> unicode via a named built-in encoding
     (parity: generic.py:1692-1716; unknown names fall through to a

@@ -1249,10 +1249,6 @@ _MS_COEF = ((256, 0), (512, -256), (0, 0), (192, 64), (240, 0),
             (460, -208), (392, -232))
 
 
-def _clamp16(v: int) -> int:
-    return -32768 if v < -32768 else (32767 if v > 32767 else v)
-
-
 def _ima_adpcm_decode(data: bytes, channels: int, block_align: int):
     """IMA ADPCM (WAV format 17) -> list of int16 samples. Block layout
     per the IMA spec: a 4-byte header per channel (int16 predictor,

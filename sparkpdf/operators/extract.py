@@ -4,19 +4,21 @@ pdf_raw(doc_id, pdf_bytes) -> documents_interleaved
     (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>, n_pages,
      n_bytes, error)
 
-All per-document work happens inside ONE `mapInPandas` kernel per Arrow
-batch (SURVEY.md §3.2): the JVM<->Python Arrow IPC is the only process
-boundary, there is NO shuffle in the extraction path, and no per-row
-Python UDFs exist anywhere (input_hint mandate). Catalyst still prunes
-columns/partitions upstream because the input is a plain DataFrame scan.
+Every lane here is a per-document row function run by
+operators/adapter.map_docs: ONE mapInArrow layer per lane, the
+JVM<->Python Arrow IPC is the only process boundary, there is NO shuffle
+in the extraction path, and no per-row Python UDFs exist anywhere
+(input_hint mandate). Catalyst still prunes columns/partitions upstream
+because the input is a plain DataFrame scan.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
+from functools import partial
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,6 +31,14 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..kernels.document import PdfDocument
+from ..kernels.extract import extract_doc, page_text
+from ..kernels.html import html_to_spans
+from ..kernels.write import _VALID_LAYOUTS, _VALID_MODES, spans_to_pdf
+from ..kernels.xmp import doc_xmp
+from ..testing.pdfgen import doc_to_pdf
+from .adapter import map_docs
 
 SPAN_STRUCT = StructType(
     [
@@ -62,100 +72,69 @@ PAGE_SPAN_SCHEMA = StructType(
     ]
 )
 
-
-def _extract_batches_fn(password: bytes = b""):
-    """Kernel adapter factory: loops DOCS inside an Arrow batch
-    (batch-level Python, not per-row Spark UDFs — SURVEY §2.15)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.extract import extract_doc
-
-        for pdf in batches:
-            out = {"doc_id": [], "spans": [], "n_pages": [], "n_bytes": [], "error": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                data = bytes(blob) if blob is not None else b""
-                res = extract_doc(data, password=password)
-                out["doc_id"].append(str(doc_id))
-                out["spans"].append(
-                    [
-                        (s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in res["spans"]
-                    ]
-                )
-                out["n_pages"].append(res["n_pages"])
-                out["n_bytes"].append(len(data))
-                out["error"].append(res["error"])
-            yield pd.DataFrame(out)
-
-    return gen
+PDF_COLS = ("doc_id", "pdf_bytes")
 
 
-_extract_batches = _extract_batches_fn()  # default: no password
+def _span_row(doc_id, pdf_bytes, password: bytes = b""):
+    """extract_spans' row: one documents_interleaved row per doc. The
+    kernel's span dicts pass through as they are (their extra
+    op_idx/page_no keys are not fields of SPAN_STRUCT)."""
+    data = pdf_bytes if pdf_bytes is not None else b""
+    res = extract_doc(data, password=password)
+    yield {
+        "doc_id": str(doc_id),
+        "spans": res["spans"],
+        "n_pages": res["n_pages"],
+        "n_bytes": len(data),
+        "error": res["error"],
+    }
 
 
-def _extract_batches_arrow_fn(password: bytes = b""):
-    """Arrow-native kernel adapter (mapInArrow): spans are assembled as
-    one flat StructArray + a ListArray offset vector per batch instead
-    of per-row Python lists-of-tuples boxed through pandas object
-    columns. Measured only ~1.03x over mapInPandas at local[32] (the
-    nested-output cost is dominated by IPC transfer volume, which both
-    paths share) — kept because it removes pandas object boxing from
-    the hottest loop and is byte-identical in output (tested)."""
+def _stats_row(doc_id, pdf_bytes):
+    """extract_stats' row: five scalars per doc, no span text."""
+    data = pdf_bytes if pdf_bytes is not None else b""
+    res = extract_doc(data)
+    texts = [s["text"] for s in res["spans"] if s["kind"] == "text"]
+    yield {
+        "doc_id": str(doc_id),
+        "n_pages": res["n_pages"],
+        "n_text": len(texts),
+        "n_media": len(res["spans"]) - len(texts),
+        "n_chars": sum(len(t or "") for t in texts),
+        "n_bytes": len(data),
+        "error": res["error"],
+    }
 
-    def gen(batches):
-        import pyarrow as pa
 
-        from ..kernels.extract import extract_doc
+def _corpus_pdf(doc_id, text) -> bytes:
+    """The corpus document synthesize_pdf_corpus writes for a
+    (doc_id, text) row (doc_id already cast to string)."""
+    return doc_to_pdf(
+        text if text is not None else "", n_media=1, title=f"doc-{doc_id}"
+    )
 
-        for rb in batches:
-            doc_ids = rb.column(0)
-            blobs = rb.column(1)
-            out_ids = []
-            kinds: list = []
-            texts: list = []
-            mrefs: list = []
-            offs: list = []
-            list_offsets = [0]
-            n_pages = []
-            n_bytes = []
-            errors = []
-            for doc_id, blob in zip(doc_ids, blobs):
-                data = blob.as_py() if blob.is_valid else b""
-                res = extract_doc(data, password=password)
-                out_ids.append(str(doc_id))
-                for s in res["spans"]:
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                list_offsets.append(len(kinds))
-                n_pages.append(res["n_pages"])
-                n_bytes.append(len(data))
-                errors.append(res["error"])
-            spans = pa.ListArray.from_arrays(
-                pa.array(list_offsets, type=pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, type=pa.string()),
-                        pa.array(texts, type=pa.string()),
-                        pa.array(mrefs, type=pa.string()),
-                        pa.array(offs, type=pa.int32()),
-                    ],
-                    names=["kind", "text", "media_ref", "offset"],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.string()),
-                    spans,
-                    pa.array(n_pages, type=pa.int32()),
-                    pa.array(n_bytes, type=pa.int64()),
-                    pa.array(errors, type=pa.string()),
-                ],
-                names=["doc_id", "spans", "n_pages", "n_bytes", "error"],
-            )
 
-    return gen
+def _synth_span_row(doc_id, text):
+    return _span_row(doc_id, _corpus_pdf(doc_id, text))
+
+
+def _synth_stats_row(doc_id, text):
+    return _stats_row(doc_id, _corpus_pdf(doc_id, text))
+
+
+def _fused_synth(documents: DataFrame, row_fn, schema,
+                 n_partitions: int | None) -> DataFrame:
+    """documents(doc_id, text) -> `row_fn` over each doc's corpus PDF,
+    synthesized and consumed inside the same Python layer."""
+    docs = documents.select(
+        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
+    )
+    if n_partitions is None:
+        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
+    return map_docs(
+        docs.repartition(n_partitions, "doc_id"),
+        ["doc_id", "text"], row_fn, schema,
+    )
 
 
 def synthesize_and_extract_spans(
@@ -168,72 +147,10 @@ def synthesize_and_extract_spans(
     synthesized PDF bytes never cross the Arrow boundary and the
     pipeline pays ONE python-runner layer instead of two chained ones
     (each (task x runner) costs a measured ~6 ms serialized worker
-    handshake; at 32 tasks that is ~0.2 s of wall per layer)."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from ..kernels.extract import extract_doc
-        from ..testing.pdfgen import doc_to_pdf
-
-        for rb in batches:
-            out_ids = []
-            kinds: list = []
-            texts: list = []
-            mrefs: list = []
-            offs: list = []
-            list_offsets = [0]
-            n_pages = []
-            n_bytes = []
-            errors = []
-            for doc_id, text in zip(rb.column(0), rb.column(1)):
-                d = str(doc_id)
-                data = doc_to_pdf(
-                    text.as_py() if text.is_valid else "",
-                    n_media=1,
-                    title=f"doc-{d}",
-                )
-                res = extract_doc(data)
-                out_ids.append(d)
-                for s in res["spans"]:
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                list_offsets.append(len(kinds))
-                n_pages.append(res["n_pages"])
-                n_bytes.append(len(data))
-                errors.append(res["error"])
-            spans = pa.ListArray.from_arrays(
-                pa.array(list_offsets, type=pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, type=pa.string()),
-                        pa.array(texts, type=pa.string()),
-                        pa.array(mrefs, type=pa.string()),
-                        pa.array(offs, type=pa.int32()),
-                    ],
-                    names=["kind", "text", "media_ref", "offset"],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.string()),
-                    spans,
-                    pa.array(n_pages, type=pa.int32()),
-                    pa.array(n_bytes, type=pa.int64()),
-                    pa.array(errors, type=pa.string()),
-                ],
-                names=["doc_id", "spans", "n_pages", "n_bytes", "error"],
-            )
-
-    return docs.repartition(n_partitions, "doc_id").mapInArrow(
-        gen, schema=INTERLEAVED_SCHEMA
+    handshake; at 32 tasks that is ~0.2 s of wall per layer). The row
+    function is extract_spans' own, fed by the corpus generator."""
+    return _fused_synth(
+        documents, _synth_span_row, INTERLEAVED_SCHEMA, n_partitions
     )
 
 
@@ -244,111 +161,44 @@ def synthesize_and_extract_stats(
     python-runner layer, and NEITHER the PDF bytes NOR the span text
     ever cross Arrow — the output is five scalars per doc. Row-identical
     to extract_stats(synthesize_pdf_corpus(documents))."""
-    docs = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.col("text")
-    )
-    if n_partitions is None:
-        n_partitions = documents.sparkSession.sparkContext.defaultParallelism
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from ..kernels.extract import extract_doc
-        from ..testing.pdfgen import doc_to_pdf
-
-        for rb in batches:
-            out = {k.name: [] for k in STATS_SCHEMA.fields}
-            for doc_id, text in zip(rb.column(0), rb.column(1)):
-                d = str(doc_id)
-                data = doc_to_pdf(
-                    text.as_py() if text.is_valid else "",
-                    n_media=1,
-                    title=f"doc-{d}",
-                )
-                res = extract_doc(data)
-                n_text = sum(
-                    1 for s in res["spans"] if s["kind"] == "text")
-                out["doc_id"].append(d)
-                out["n_pages"].append(res["n_pages"])
-                out["n_text"].append(n_text)
-                out["n_media"].append(len(res["spans"]) - n_text)
-                out["n_chars"].append(
-                    sum(len(s["text"] or "") for s in res["spans"]
-                        if s["kind"] == "text")
-                )
-                out["n_bytes"].append(len(data))
-                out["error"].append(res["error"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["n_pages"], type=pa.int32()),
-                    pa.array(out["n_text"], type=pa.int32()),
-                    pa.array(out["n_media"], type=pa.int32()),
-                    pa.array(out["n_chars"], type=pa.int64()),
-                    pa.array(out["n_bytes"], type=pa.int64()),
-                    pa.array(out["error"], type=pa.string()),
-                ],
-                names=[f.name for f in STATS_SCHEMA.fields],
-            )
-
-    return docs.repartition(n_partitions, "doc_id").mapInArrow(
-        gen, schema=STATS_SCHEMA
+    return _fused_synth(
+        documents, _synth_stats_row, STATS_SCHEMA, n_partitions
     )
 
 
 def extract_spans(pdf_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """pdf_raw(doc_id, pdf_bytes, ...) -> documents_interleaved.
     `password` decrypts standard-security-handler docs (C3)."""
-    import os
-
-    if os.environ.get("SPARKPDF_PANDAS_SPANS"):  # comparison/debug path
-        return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-            _extract_batches_fn(password) if password else _extract_batches,
-            schema=INTERLEAVED_SCHEMA,
-        )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInArrow(
-        _extract_batches_arrow_fn(password),
-        schema=INTERLEAVED_SCHEMA,
+    return map_docs(
+        pdf_raw, PDF_COLS, partial(_span_row, password=password),
+        INTERLEAVED_SCHEMA,
     )
 
 
-def _extract_page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.extract import extract_doc, page_text
-
-    for pdf in batches:
-        rows = {
-            "doc_id": [], "page_no": [], "spans": [], "full_text": [],
-            "rotate": [], "mediabox": [], "error": [],
+def _page_span_rows(doc_id, pdf_bytes):
+    data = pdf_bytes if pdf_bytes is not None else b""
+    # single parse: page metas come from extract_doc's own PdfDocument
+    res = extract_doc(data, with_page_meta=True)
+    metas: dict = res["page_meta"]
+    by_page: dict = {p: [] for p in range(res["n_pages"])}
+    for s in res["spans"]:
+        by_page.setdefault(s["page_no"], []).append(s)
+    for page_no in sorted(by_page):
+        meta = metas.get(page_no, {})
+        yield {
+            "doc_id": str(doc_id),
+            "page_no": page_no,
+            "spans": by_page[page_no],
+            "full_text": page_text(res["spans"], page_no),
+            "rotate": meta.get("rotate", 0),
+            "mediabox": meta.get("mediabox"),
+            "error": res["error"],
         }
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            data = bytes(blob) if blob is not None else b""
-            # single parse: page metas come from extract_doc's own
-            # PdfDocument (round-1 parsed every doc twice here)
-            res = extract_doc(data, with_page_meta=True)
-            metas: dict = res["page_meta"]
-            by_page: dict = {p: [] for p in range(res["n_pages"])}
-            for s in res["spans"]:
-                by_page.setdefault(s["page_no"], []).append(s)
-            for page_no in sorted(by_page):
-                spans = by_page[page_no]
-                meta = metas.get(page_no, {})
-                rows["doc_id"].append(str(doc_id))
-                rows["page_no"].append(page_no)
-                rows["spans"].append(
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-                )
-                rows["full_text"].append(page_text(res["spans"], page_no))
-                rows["rotate"].append(meta.get("rotate", 0))
-                rows["mediabox"].append(meta.get("mediabox"))
-                rows["error"].append(res["error"])
-        yield pd.DataFrame(rows)
 
 
 def extract_page_spans(pdf_raw: DataFrame) -> DataFrame:
     """Page-granular variant feeding split/merge/page-range operators."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _extract_page_batches, schema=PAGE_SPAN_SCHEMA
-    )
+    return map_docs(pdf_raw, PDF_COLS, _page_span_rows, PAGE_SPAN_SCHEMA)
 
 
 # --- corpus synthesis (documents table -> pdf_raw), also distributed --------
@@ -362,19 +212,13 @@ PDF_RAW_SCHEMA = StructType(
 
 
 def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..testing.pdfgen import doc_to_pdf
+    import pandas as pd
 
     for pdf in batches:
         out = {"doc_id": [], "pdf_bytes": []}
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
             out["doc_id"].append(str(doc_id))
-            out["pdf_bytes"].append(
-                doc_to_pdf(
-                    text if text is not None else "",
-                    n_media=1,
-                    title=f"doc-{doc_id}",
-                )
-            )
+            out["pdf_bytes"].append(_corpus_pdf(doc_id, text))
         yield pd.DataFrame(out)
 
 
@@ -401,67 +245,45 @@ def _sniff_is_pdf(data: bytes) -> bool:
     return idx >= 0 and not _HTML_PREFIX.search(data[:idx])
 
 
-def _interleaved_batches_fn(with_ctype: bool):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.extract import extract_doc
-        from ..kernels.html import html_to_spans
-
-        for pdf in batches:
-            out = {"doc_id": [], "spans": [], "n_pages": [],
-                   "n_bytes": [], "error": []}
-            ctypes = (pdf["content_type"] if with_ctype
-                      else [None] * len(pdf))
-            for doc_id, blob, ctype in zip(
-                    pdf["doc_id"], pdf["payload"], ctypes):
-                data = bytes(blob) if blob is not None else b""
+def _interleaved_row(doc_id, payload, content_type=None):
+    data = payload if payload is not None else b""
+    try:
+        # inside the try: a non-string content_type must quarantine the
+        # ROW, never kill the task (invariant 2)
+        base = (str(content_type).split(";")[0].strip().lower()
+                if isinstance(content_type, str) and content_type
+                else "")
+        # a declared upstream content type (e.g. the WARC HTTP
+        # envelope) outranks the byte sniff
+        if base == "application/pdf" or (
+                base not in ("text/html",) and _sniff_is_pdf(data)):
+            res = extract_doc(data)
+            spans, n_pages, error = res["spans"], res["n_pages"], res["error"]
+        else:
+            # textual lane: a NUL/control-dense payload is not a
+            # document of either kind -> quarantine (a torn-header PDF
+            # still routes above via the magic-in-first-1KB scan)
+            head = data[:4096]
+            ctrl = sum(1 for b in head if b < 9 or 13 < b < 32)
+            if data and ctrl * 10 > len(head):
+                spans, n_pages = [], 0
+                error = "unrecognized payload (binary, no PDF magic)"
+            else:
                 try:
-                    # inside the try: a non-string/NaN content_type
-                    # must quarantine the ROW, never kill the task
-                    # (invariant 2)
-                    base = (str(ctype).split(";")[0].strip().lower()
-                            if isinstance(ctype, str) and ctype
-                            else "")
-                    # a declared upstream content type (e.g. the WARC
-                    # HTTP envelope) outranks the byte sniff
-                    if base == "application/pdf" or (
-                            base not in ("text/html",)
-                            and _sniff_is_pdf(data)):
-                        res = extract_doc(data)
-                        spans = res["spans"]
-                        n_pages, error = res["n_pages"], res["error"]
-                    else:
-                        # textual lane: a NUL/control-dense payload is
-                        # not a document of either kind -> quarantine
-                        # (a torn-header PDF still routes above via
-                        # the magic-in-first-1KB scan)
-                        head = data[:4096]
-                        ctrl = sum(1 for b in head
-                                   if b < 9 or 13 < b < 32)
-                        if data and ctrl * 10 > len(head):
-                            spans, n_pages = [], 0
-                            error = ("unrecognized payload (binary, "
-                                     "no PDF magic)")
-                        else:
-                            try:
-                                textual = data.decode("utf-8")
-                            except UnicodeDecodeError:
-                                textual = data.decode("latin-1")
-                            res = html_to_spans(textual)
-                            spans, n_pages, error = res["spans"], 1, None
-                except Exception as exc:  # quarantine, never dead task
-                    spans, n_pages = [], 0
-                    error = f"{type(exc).__name__}: {exc}"[:500]
-                out["doc_id"].append(str(doc_id))
-                out["spans"].append(
-                    [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in spans]
-                )
-                out["n_pages"].append(n_pages)
-                out["n_bytes"].append(len(data))
-                out["error"].append(error)
-            yield pd.DataFrame(out)
-
-    return gen
+                    textual = data.decode("utf-8")
+                except UnicodeDecodeError:
+                    textual = data.decode("latin-1")
+                spans, n_pages, error = html_to_spans(textual)["spans"], 1, None
+    except Exception as exc:  # quarantine, never dead task
+        spans, n_pages = [], 0
+        error = f"{type(exc).__name__}: {exc}"[:500]
+    yield {
+        "doc_id": str(doc_id),
+        "spans": spans,
+        "n_pages": n_pages,
+        "n_bytes": len(data),
+        "error": error,
+    }
 
 
 def extract_interleaved(
@@ -485,16 +307,10 @@ def extract_interleaved(
     application/pdf forces the PDF lane, text/html the DOM lane; only
     unlabeled payloads fall back to the magic scan (which itself
     requires no '<' before the magic, see _sniff_is_pdf)."""
-    if content_type_col is None:
-        return raw.select("doc_id", "payload").mapInPandas(
-            _interleaved_batches_fn(False), schema=INTERLEAVED_SCHEMA
-        )
-    return raw.select(
-        "doc_id", "payload",
-        F.col(content_type_col).alias("content_type"),
-    ).mapInPandas(
-        _interleaved_batches_fn(True), schema=INTERLEAVED_SCHEMA
-    )
+    cols = ["doc_id", "payload"]
+    if content_type_col is not None:
+        cols.append(F.col(content_type_col).alias("content_type"))
+    return map_docs(raw, cols, _interleaved_row, INTERLEAVED_SCHEMA)
 
 
 def synthesize_interleaved_corpus(
@@ -516,8 +332,9 @@ def synthesize_interleaved_corpus(
         n_partitions = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         from ..kernels.html import synthesize_interleaved_html
-        from ..testing.pdfgen import doc_to_pdf
 
         for pdf in batches:
             out = {"doc_id": [], "payload": []}
@@ -569,6 +386,8 @@ def synthesize_pdf_corpus(
 
 def _synth_paged_batches(n_pages: int):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         from ..testing.pdfgen import doc_to_pdf_paged
 
         for pdf in batches:
@@ -609,34 +428,29 @@ DOCINFO_SCHEMA = StructType(
 )
 
 
-def _docinfo_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.document import PdfDocument
-    from ..kernels.cos import PdfError
+def _pdf_str(v):
+    if isinstance(v, bytes):
+        return v.decode("latin-1", "replace")
+    return str(v) if v is not None else None
 
-    for pdf in batches:
-        out = {"doc_id": [], "title": [], "producer": [], "info_n_pages": []}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            title = producer = None
-            n_pages = 0
-            try:
-                doc = PdfDocument(bytes(blob))
-                info = doc.doc_info() or {}
 
-                def _s(v):
-                    if isinstance(v, bytes):
-                        return v.decode("latin-1", "replace")
-                    return str(v) if v is not None else None
-
-                title = _s(info.get("/Title"))
-                producer = _s(info.get("/Producer"))
-                n_pages = doc.num_pages()
-            except (PdfError, Exception):
-                pass
-            out["doc_id"].append(str(doc_id))
-            out["title"].append(title)
-            out["producer"].append(producer)
-            out["info_n_pages"].append(n_pages)
-        yield pd.DataFrame(out)
+def _docinfo_row(doc_id, pdf_bytes):
+    title = producer = None
+    n_pages = 0
+    try:
+        doc = PdfDocument(bytes(pdf_bytes))
+        info = doc.doc_info() or {}
+        title = _pdf_str(info.get("/Title"))
+        producer = _pdf_str(info.get("/Producer"))
+        n_pages = doc.num_pages()
+    except Exception:
+        pass
+    yield {
+        "doc_id": str(doc_id),
+        "title": title,
+        "producer": producer,
+        "info_n_pages": n_pages,
+    }
 
 
 def extract_docinfo(pdf_raw: DataFrame) -> DataFrame:
@@ -644,9 +458,7 @@ def extract_docinfo(pdf_raw: DataFrame) -> DataFrame:
     _reader.py:244-260): the kernel touches only the xref chain +
     /Info object — content streams are never decoded, which is what
     makes metadata queries cheap at 100 TB."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _docinfo_batches, schema=DOCINFO_SCHEMA
-    )
+    return map_docs(pdf_raw, PDF_COLS, _docinfo_row, DOCINFO_SCHEMA)
 
 
 # --- interactive-document projections (P2/P4/P5) -----------------------------
@@ -680,62 +492,41 @@ OUTLINES_SCHEMA = StructType(
 )
 
 
-def _projection_batches(project):
-    """Factory for doc->rows projection kernels (fields/dests/outlines)."""
+def _projected_rows(project, doc_id, pdf_bytes):
+    rows = []
+    try:
+        doc = PdfDocument(bytes(pdf_bytes))
+        for rec in project(doc):
+            rows.append({"doc_id": str(doc_id), **rec})
+    except Exception:
+        pass  # quarantine: skip the unparseable (rest of the) doc
+    return rows
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.document import PdfDocument
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for rec in project(doc):
-                        rows.append({"doc_id": str(doc_id), **rec})
-                except Exception:
-                    continue  # quarantine: skip unparseable docs
-            yield pd.DataFrame(rows)
-
-    return gen
+def _project(pdf_raw: DataFrame, project, schema) -> DataFrame:
+    """doc -> rows projection lane (fields/dests/outlines/...)."""
+    return map_docs(pdf_raw, PDF_COLS, partial(_projected_rows, project),
+                    schema)
 
 
 def extract_form_fields(pdf_raw: DataFrame) -> DataFrame:
     """AcroForm projection (parity: getFields, _reader.py:355-450 —
     whose Field ctor is dead code in the reference; we implement the
     intended semantics, see kernels/document.form_fields)."""
-    kernel = _projection_batches(
-        lambda doc: (
-            {
-                "name": f["name"],
-                "ft": f["ft"],
-                "value": f["value"],
-                "flags": f["flags"],
-            }
-            for f in doc.form_fields()
-        )
-    )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=FORM_FIELDS_SCHEMA
-    )
+    return _project(pdf_raw, PdfDocument.form_fields, FORM_FIELDS_SCHEMA)
 
 
 def extract_named_dests(pdf_raw: DataFrame) -> DataFrame:
     """Name-tree destinations (parity: getNamedDestinations,
     _reader.py:464-503)."""
-    kernel = _projection_batches(lambda doc: iter(doc.named_destinations()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=NAMED_DESTS_SCHEMA
-    )
+    return _project(pdf_raw, PdfDocument.named_destinations,
+                    NAMED_DESTS_SCHEMA)
 
 
 def extract_outlines(pdf_raw: DataFrame) -> DataFrame:
     """Bookmark tree flattened with level (parity: getOutlines,
     _reader.py:513-558)."""
-    kernel = _projection_batches(lambda doc: iter(doc.outlines()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=OUTLINES_SCHEMA
-    )
+    return _project(pdf_raw, PdfDocument.outlines, OUTLINES_SCHEMA)
 
 
 LINKS_SCHEMA = StructType(
@@ -751,10 +542,7 @@ LINKS_SCHEMA = StructType(
 def extract_links(pdf_raw: DataFrame) -> DataFrame:
     """Link-annotation projection (the read side of removeLinks,
     _writer.py:871-877)."""
-    kernel = _projection_batches(lambda doc: iter(doc.link_annotations()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=LINKS_SCHEMA
-    )
+    return _project(pdf_raw, PdfDocument.link_annotations, LINKS_SCHEMA)
 
 
 ATTACHMENTS_SCHEMA = StructType(
@@ -772,21 +560,17 @@ def extract_attachments(pdf_raw: DataFrame) -> DataFrame:
     _writer.py:280-358): one row per attachment with size + digest —
     at corpus scale the attachment payloads feed the same media/dedup
     pipelines as XObject media."""
-    import hashlib
+    return _project(pdf_raw, _attachment_records, ATTACHMENTS_SCHEMA)
 
-    def project(doc):
-        for a in doc.attachments():
-            data = a["data"] or b""
-            yield {
-                "filename": a["filename"],
-                "n_bytes": len(data),
-                "sha8": hashlib.sha256(data).hexdigest()[:8],
-            }
 
-    kernel = _projection_batches(project)
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=ATTACHMENTS_SCHEMA
-    )
+def _attachment_records(doc):
+    for a in doc.attachments():
+        data = a["data"] or b""
+        yield {
+            "filename": a["filename"],
+            "n_bytes": len(data),
+            "sha8": hashlib.sha256(data).hexdigest()[:8],
+        }
 
 
 JAVASCRIPT_SCHEMA = StructType(
@@ -801,10 +585,7 @@ JAVASCRIPT_SCHEMA = StructType(
 def extract_javascript(pdf_raw: DataFrame) -> DataFrame:
     """Document-open JavaScript projection (read side of addJS,
     _writer.py:237-279): /Names//JavaScript entries + /OpenAction."""
-    kernel = _projection_batches(lambda doc: iter(doc.javascript()))
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=JAVASCRIPT_SCHEMA
-    )
+    return _project(pdf_raw, PdfDocument.javascript, JAVASCRIPT_SCHEMA)
 
 
 XMP_SCHEMA = StructType(
@@ -833,35 +614,32 @@ def extract_xmp(pdf_raw: DataFrame) -> DataFrame:
     canonicalizer hashes strings, not arrays), pdf:Keywords/PDFVersion/
     Producer, xmp dates + CreatorTool, xmpMM DocumentID, and the pdfx
     custom-property map ('my car' exercises the U+2182 key unescape)."""
+    return _project(pdf_raw, _xmp_records, XMP_SCHEMA)
 
-    def project(doc):
-        from ..kernels.xmp import doc_xmp
 
-        info = doc_xmp(doc)
-        if info is None:
-            return
-        d = info.as_dict()
-        fmt = "%Y-%m-%dT%H:%M:%S"
-        date = lambda v: v.strftime(fmt) if v else None
-        yield {
-            "xmp_title": d["title"],
-            "xmp_producer": d["producer"],
-            "create_date": date(d["create_date"]),
-            "modify_date": date(d["modify_date"]),
-            "creators": ";".join(d["creators"]) or None,
-            "subjects": ";".join(d["subjects"]) or None,
-            "keywords": d["keywords"],
-            "pdfversion": d["pdfversion"],
-            "creator_tool": d["creator_tool"],
-            "metadata_date": date(d["metadata_date"]),
-            "document_id": d["document_id"],
-            "custom_car": d["custom"].get("my car"),
-        }
+def _xmp_date(v):
+    return v.strftime("%Y-%m-%dT%H:%M:%S") if v else None
 
-    kernel = _projection_batches(project)
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=XMP_SCHEMA
-    )
+
+def _xmp_records(doc):
+    info = doc_xmp(doc)
+    if info is None:
+        return
+    d = info.as_dict()
+    yield {
+        "xmp_title": d["title"],
+        "xmp_producer": d["producer"],
+        "create_date": _xmp_date(d["create_date"]),
+        "modify_date": _xmp_date(d["modify_date"]),
+        "creators": ";".join(d["creators"]) or None,
+        "subjects": ";".join(d["subjects"]) or None,
+        "keywords": d["keywords"],
+        "pdfversion": d["pdfversion"],
+        "creator_tool": d["creator_tool"],
+        "metadata_date": _xmp_date(d["metadata_date"]),
+        "document_id": d["document_id"],
+        "custom_car": d["custom"].get("my car"),
+    }
 
 
 VIEWER_PREFS_SCHEMA = StructType(
@@ -876,40 +654,39 @@ VIEWER_PREFS_SCHEMA = StructType(
 def extract_viewer_prefs(pdf_raw: DataFrame) -> DataFrame:
     """Catalog /PageLayout + /PageMode projection (parity:
     getPageLayout/getPageMode, _reader.py:654-693)."""
-    kernel = _projection_batches(
-        lambda doc: iter(
-            [{"page_layout": doc.page_layout(), "page_mode": doc.page_mode()}]
-        )
-    )
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        kernel, schema=VIEWER_PREFS_SCHEMA
-    )
+    return _project(pdf_raw, _viewer_prefs, VIEWER_PREFS_SCHEMA)
+
+
+def _viewer_prefs(doc):
+    yield {"page_layout": doc.page_layout(), "page_mode": doc.page_mode()}
 
 
 # --- write side: spans -> PDF bytes (SURVEY §2.2 K1 inverse) ------------------
 
-def _write_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.write import spans_to_pdf
+SPAN_COLS = ("doc_id", "spans")
 
-    for pdf in batches:
-        out = {"doc_id": [], "pdf_bytes": []}
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            page = [
-                {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                for s in spans
-            ]
-            out["doc_id"].append(str(doc_id))
-            # even docs get the classic xref table, odd docs the PDF 1.5
-            # cross-reference STREAM — the round-trip query certifies
-            # both serializations with the same oracle
-            try:
-                d = int(doc_id)
-            except (TypeError, ValueError):
-                d = 0
-            out["pdf_bytes"].append(
-                spans_to_pdf([page], xref_stream=bool(d % 2))
-            )
-        yield pd.DataFrame(out)
+
+def _page(spans) -> list:
+    """A span array as one page of spans_to_pdf input."""
+    return [
+        {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
+        for s in spans
+    ]
+
+
+def _write_row(doc_id, spans):
+    page = _page(spans)
+    # even docs get the classic xref table, odd docs the PDF 1.5
+    # cross-reference STREAM — the round-trip query certifies both
+    # serializations with the same oracle
+    try:
+        d = int(doc_id)
+    except (TypeError, ValueError):
+        d = 0
+    yield {
+        "doc_id": str(doc_id),
+        "pdf_bytes": spans_to_pdf([page], xref_stream=bool(d % 2)),
+    }
 
 
 def write_pdfs(interleaved: DataFrame) -> DataFrame:
@@ -918,9 +695,25 @@ def write_pdfs(interleaved: DataFrame) -> DataFrame:
     reads the written files (tests/test_write.py). Odd doc_ids are
     serialized with a PDF 1.5 xref STREAM, even ones with the classic
     table (both read back identically)."""
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        _write_batches, schema=PDF_RAW_SCHEMA
-    )
+    return map_docs(interleaved, SPAN_COLS, _write_row, PDF_RAW_SCHEMA)
+
+
+def _enriched_row(doc_id, spans, password, encryption, permissions):
+    d = str(doc_id)
+    yield {
+        "doc_id": d,
+        "pdf_bytes": spans_to_pdf(
+            [_page(spans)],
+            title=f"doc-{d}",
+            bookmarks=[(f"bm-{d}", 0)],
+            links=[(0, f"https://example.org/w/{d}")],
+            attachments=[(f"att-{d}.txt", f"payload-{d}".encode())],
+            form_fields=[(f"wfld-{d}", f"wval-{d}")],
+            user_password=password,
+            encryption=encryption,
+            permissions=permissions,
+        ),
+    }
 
 
 def write_pdfs_enriched(
@@ -937,39 +730,22 @@ def write_pdfs_enriched(
     permissions_flag=...), :443-496). The REFERENCE decrypts and reads
     the RC4 output (tests/test_write.py interop); it rejects the AES
     modes, which our reader decrypts (tests/test_aes.py)."""
+    row_fn = partial(_enriched_row, password=password,
+                     encryption=encryption, permissions=permissions)
+    return map_docs(interleaved, SPAN_COLS, row_fn, PDF_RAW_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = str(doc_id)
-                page = [
-                    {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                out["doc_id"].append(d)
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page],
-                        title=f"doc-{d}",
-                        bookmarks=[(f"bm-{d}", 0)],
-                        links=[(0, f"https://example.org/w/{d}")],
-                        attachments=[
-                            (f"att-{d}.txt", f"payload-{d}".encode())
-                        ],
-                        form_fields=[(f"wfld-{d}", f"wval-{d}")],
-                        user_password=password,
-                        encryption=encryption,
-                        permissions=permissions,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+def _viewer_prefs_row(doc_id, spans):
+    d = int(doc_id)
+    page = _page(spans)
+    yield {
+        "doc_id": str(doc_id),
+        "pdf_bytes": spans_to_pdf(
+            [page],
+            page_layout=_VALID_LAYOUTS[d % 7],
+            page_mode=_VALID_MODES[d % 6],
+        ),
+    }
 
 
 def write_pdfs_viewer_prefs(interleaved: DataFrame) -> DataFrame:
@@ -978,33 +754,25 @@ def write_pdfs_viewer_prefs(interleaved: DataFrame) -> DataFrame:
     modes[doc_id % 6] (the reference's full accepted lists,
     setPageLayout/setPageMode _writer.py:1157-1258), doc_id-derived so
     the DuckDB oracle restates them by formula."""
-    from ..kernels.write import _VALID_LAYOUTS, _VALID_MODES
+    return map_docs(interleaved, SPAN_COLS, _viewer_prefs_row, PDF_RAW_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.write import spans_to_pdf
 
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = int(doc_id)
-                page = [
-                    {"kind": s["kind"], "text": s["text"],
-                     "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                out["doc_id"].append(str(doc_id))
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page],
-                        page_layout=_VALID_LAYOUTS[d % 7],
-                        page_mode=_VALID_MODES[d % 6],
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+def _navigation_row(doc_id, spans):
+    d = str(doc_id)
+    page1 = [{"kind": "text", "text": f"appendix {d}\n", "media_ref": None}]
+    yield {
+        "doc_id": d,
+        "pdf_bytes": spans_to_pdf(
+            [_page(spans), page1],
+            bookmarks=[(f"root-{d}", 0), (f"child-{d}", 1, 0)],
+            links=[
+                (0, 1, (10, 10, 200, 30), "/Fit"),  # GoTo
+                (1, f"https://example.org/n/{d}"),  # URI
+            ],
+            named_dests=[(f"nd-{d}", 1)],
+            javascript=f"app.alert('{d}');",
+        ),
+    }
 
 
 def write_pdfs_navigation(interleaved: DataFrame) -> DataFrame:
@@ -1016,50 +784,14 @@ def write_pdfs_navigation(interleaved: DataFrame) -> DataFrame:
     _writer.py:852-869), and document-open JavaScript (addJS,
     _writer.py:237-279). All values derive from doc_id so the DuckDB
     oracle can recompute them."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.write import spans_to_pdf
-
-        for pdf in batches:
-            out = {"doc_id": [], "pdf_bytes": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                d = str(doc_id)
-                page0 = [
-                    {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-                    for s in spans
-                ]
-                page1 = [{"kind": "text", "text": f"appendix {d}\n", "media_ref": None}]
-                out["doc_id"].append(d)
-                out["pdf_bytes"].append(
-                    spans_to_pdf(
-                        [page0, page1],
-                        bookmarks=[(f"root-{d}", 0), (f"child-{d}", 1, 0)],
-                        links=[
-                            (0, 1, (10, 10, 200, 30), "/Fit"),  # GoTo
-                            (1, f"https://example.org/n/{d}"),  # URI
-                        ],
-                        named_dests=[(f"nd-{d}", 1)],
-                        javascript=f"app.alert('{d}');",
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return interleaved.select("doc_id", "spans").mapInPandas(
-        gen, schema=PDF_RAW_SCHEMA
-    )
+    return map_docs(interleaved, SPAN_COLS, _navigation_row, PDF_RAW_SCHEMA)
 
 
 def _write_paged_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    from ..kernels.write import spans_to_pdf
+    import pandas as pd
 
     pdf = pdf.sort_values("page_no")
-    pages = [
-        [
-            {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-            for s in spans
-        ]
-        for spans in pdf["spans"]
-    ]
+    pages = [_page(spans) for spans in pdf["spans"]]
     return pd.DataFrame({"doc_id": [key[0]], "pdf_bytes": [spans_to_pdf(pages)]})
 
 
@@ -1087,32 +819,9 @@ STATS_SCHEMA = StructType(
 )
 
 
-def _stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernels.extract import extract_doc
-
-    for pdf in batches:
-        out = {k.name: [] for k in STATS_SCHEMA.fields}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-            data = bytes(blob) if blob is not None else b""
-            res = extract_doc(data)
-            n_text = sum(1 for s in res["spans"] if s["kind"] == "text")
-            out["doc_id"].append(str(doc_id))
-            out["n_pages"].append(res["n_pages"])
-            out["n_text"].append(n_text)
-            out["n_media"].append(len(res["spans"]) - n_text)
-            out["n_chars"].append(
-                sum(len(s["text"] or "") for s in res["spans"] if s["kind"] == "text")
-            )
-            out["n_bytes"].append(len(data))
-            out["error"].append(res["error"])
-        yield pd.DataFrame(out)
-
-
 def extract_stats(pdf_raw: DataFrame) -> DataFrame:
     """Corpus statistics WITHOUT shipping span text back over Arrow —
-    Catalyst cannot prune columns inside a mapInPandas output, so
+    Catalyst cannot prune columns inside a Python map's output, so
     stats-only pipelines at 100 TB use this kernel and move ~50x fewer
     bytes JVM<-python than extract_spans."""
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        _stats_batches, schema=STATS_SCHEMA
-    )
+    return map_docs(pdf_raw, PDF_COLS, _stats_row, STATS_SCHEMA)

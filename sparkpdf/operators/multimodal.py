@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Real Spark-side plumbing (schema, Arrow batch shape, mapInPandas
-signatures, partitioning) with REAL decode for every modality
+Real Spark-side plumbing (schema, Arrow batch shape, map_docs row
+functions, partitioning) with REAL decode for every modality
 (kernels/media.py + kernels/jpeg.py + kernels/ccitt_g4.py — no codec
 library needed): image PIXELS (JPEG incl. progressive/12-bit/
 lossless, PNG, GIF animation, TIFF, G4 fax), audio SAMPLES (WAV PCM/
@@ -22,6 +22,7 @@ media table schema:
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -37,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .adapter import map_docs
 
 MEDIA_SCHEMA = StructType(
     [
@@ -772,6 +775,8 @@ def synthesize_lossless_jpeg_media(documents: DataFrame) -> DataFrame:
 MEDIA_PAYLOAD_SCHEMA = StructType(
     MEDIA_SCHEMA.fields + [StructField("error", StringType())]
 )
+PDF_COLS = ("doc_id", "pdf_bytes")
+MEDIA_COLS = ("doc_id", "media_ref", "payload")
 
 
 def extract_media_payloads(pdf_raw: DataFrame) -> DataFrame:
@@ -783,33 +788,31 @@ def extract_media_payloads(pdf_raw: DataFrame) -> DataFrame:
     error string — silent drops are unaccountable losses at corpus
     scale. media_ref is 'p{page}/{name}' so multi-page name reuse stays
     unique."""
+    return map_docs(pdf_raw, PDF_COLS, _media_payload_rows,
+                    MEDIA_PAYLOAD_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.document import PdfDocument
 
-        cols = ("doc_id", "media_ref", "modality", "payload", "error")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for m in doc.media_objects():
-                        out["doc_id"].append(str(doc_id))
-                        out["media_ref"].append(f"p{m['page_no']}/{m['name']}")
-                        out["modality"].append("image")
-                        out["payload"].append(m["data"])
-                        out["error"].append(None)
-                except Exception as exc:  # quarantine, never drop
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(None)
-                    out["modality"].append(None)
-                    out["payload"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
+def _quarantine_row(doc_id, exc: Exception) -> dict:
+    """The one media row of a document that does not parse."""
+    return {"doc_id": str(doc_id),
+            "error": f"{type(exc).__name__}: {exc}"[:500]}
 
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        gen, schema=MEDIA_PAYLOAD_SCHEMA
-    )
+
+def _media_payload_rows(doc_id, pdf_bytes):
+    from ..kernels.document import PdfDocument
+
+    rows = []
+    try:
+        for m in PdfDocument(bytes(pdf_bytes)).media_objects():
+            rows.append({
+                "doc_id": str(doc_id),
+                "media_ref": f"p{m['page_no']}/{m['name']}",
+                "modality": "image",
+                "payload": m["data"],
+            })
+    except Exception as exc:  # quarantine, never drop
+        rows.append(_quarantine_row(doc_id, exc))
+    return rows
 
 
 def _tile_jpeg(d: int) -> bytes:
@@ -1000,44 +1003,25 @@ def write_pdfs_with_jp2_media(documents: DataFrame) -> DataFrame:
     return docs.repartition(n_parts, "doc_id").mapInPandas(gen, schema=schema)
 
 
-def _make_feature_batches(pixel_formats: "set | None" = None):
-    def _feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        decoders = dict(DECODERS)
-        decoders["image"] = lambda p: _decode_image(p, pixel_formats)
-        for pdf in batches:
-            out = {k.name: [] for k in FEATURE_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                decoder = decoders.get(row.modality)
-                try:
-                    meta = decoder(payload) if decoder else {}
-                except Exception:
-                    # quarantine discipline: a corrupt payload (e.g. a G4
-                    # TIFF with a truncated/garbled bitstream) yields empty
-                    # features, never a dead task
-                    meta = {}
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                out["modality"].append(row.modality)
-                out["format"].append(meta.get("format"))
-                out["width"].append(meta.get("width"))
-                out["height"].append(meta.get("height"))
-                out["n_bytes"].append(len(payload))
-                out["sha8"].append(hashlib.sha256(payload).hexdigest()[:8])
-                out["ink_ratio"].append(meta.get("ink_ratio"))
-                out["duration_ms"].append(meta.get("duration_ms"))
-                out["sample_rate"].append(meta.get("sample_rate"))
-                out["mean_luma"].append(meta.get("mean_luma"))
-                out["n_frames"].append(meta.get("n_frames"))
-                out["bits"].append(meta.get("bits"))
-            yield pd.DataFrame(out)
-
-    return _feature_batches
-
-
-_feature_batches = _make_feature_batches()
+def _feature_row(decoders, doc_id, media_ref, modality, payload):
+    payload = payload if payload is not None else b""
+    decoder = decoders.get(modality)
+    try:
+        meta = decoder(payload) if decoder else {}
+    except Exception:
+        # quarantine discipline: a corrupt payload (e.g. a G4 TIFF with
+        # a truncated/garbled bitstream) yields empty features, never a
+        # dead task
+        meta = {}
+    # format/dims/duration/... come from the decoder's meta dict
+    yield {
+        **meta,
+        "doc_id": doc_id,
+        "media_ref": media_ref,
+        "modality": modality,
+        "n_bytes": len(payload),
+        "sha8": hashlib.sha256(payload).hexdigest()[:8],
+    }
 
 
 def extract_media_features(
@@ -1048,8 +1032,11 @@ def extract_media_features(
     `pixel_formats`: None = global SPARKPDF_PIXEL_STATS knob; a set
     (usually pixel_stats_policy(...)["decode_formats"]) = decode pixel
     statistics only for those image formats, header-only otherwise."""
-    return media.mapInPandas(
-        _make_feature_batches(pixel_formats), schema=FEATURE_SCHEMA
+    decoders = {**DECODERS,
+                "image": partial(_decode_image, pixel_formats=pixel_formats)}
+    return map_docs(
+        media, ["doc_id", "media_ref", "modality", "payload"],
+        partial(_feature_row, decoders), FEATURE_SCHEMA,
     )
 
 
@@ -1079,65 +1066,56 @@ def extract_audio_pcm_features(media: DataFrame) -> DataFrame:
     dispatched on magic) and emit n_samples + normalized
     rms/peak/mean. Unsupported-codec payloads quarantine via the
     error column — never a raise, never a dropped row (the
-    extract_doc contract). Arrow-batched mapInPandas."""
+    extract_doc contract). Arrow-batched map_docs lane."""
+    return map_docs(media, MEDIA_COLS, _audio_pcm_row, AUDIO_PCM_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.media import (
-            aiff_pcm_stats,
-            au_pcm_stats,
-            flac_pcm_stats,
-            mp4_pcm_stats,
-            ogg_flac_pcm_stats,
-            wav_pcm_stats,
-        )
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_PCM_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                out["doc_id"].append(str(doc_id))
-                out["media_ref"].append(str(media_ref))
-                stats, err = None, None
-                try:
-                    raw = bytes(payload)
-                    # magic dispatch (round 7): RIFF -> WAV lane
-                    # (incl. ADPCM), fLaC -> FLAC frame decode,
-                    # FORM/AIFF -> big-endian AIFF, .snd -> Sun AU;
-                    # all share the normalized
-                    # {n_samples, rms, peak, mean} contract
-                    if raw[:4] == b"fLaC":
-                        stats = flac_pcm_stats(raw)
-                    elif raw[:4] == b"OggS":
-                        stats = ogg_flac_pcm_stats(raw)
-                    elif raw[:4] == b"FORM":
-                        stats = aiff_pcm_stats(raw)
-                    elif raw[:4] == b".snd":
-                        stats = au_pcm_stats(raw)
-                    elif raw[4:8] == b"ftyp":
-                        stats = mp4_pcm_stats(raw)
-                    else:
-                        stats = wav_pcm_stats(raw)
-                    if stats is None:
-                        err = (
-                            "unsupported audio payload (not PCM/float/"
-                            "G.711/ADPCM WAV, AIFF, AU, or decodable "
-                            "native/Ogg FLAC)"
-                        )
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                out["n_samples"].append(
-                    int(stats["n_samples"]) if stats else None
-                )
-                out["rms"].append(stats["rms"] if stats else None)
-                out["peak"].append(stats["peak"] if stats else None)
-                out["mean"].append(stats["mean"] if stats else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=AUDIO_PCM_SCHEMA
+def _audio_pcm_row(doc_id, media_ref, payload):
+    from ..kernels.media import (
+        aiff_pcm_stats,
+        au_pcm_stats,
+        flac_pcm_stats,
+        mp4_pcm_stats,
+        ogg_flac_pcm_stats,
+        wav_pcm_stats,
     )
+
+    stats, err = None, None
+    try:
+        raw = bytes(payload)
+        # magic dispatch (round 7): RIFF -> WAV lane (incl. ADPCM),
+        # fLaC -> FLAC frame decode, FORM/AIFF -> big-endian AIFF,
+        # .snd -> Sun AU; all share the normalized
+        # {n_samples, rms, peak, mean} contract
+        if raw[:4] == b"fLaC":
+            stats = flac_pcm_stats(raw)
+        elif raw[:4] == b"OggS":
+            stats = ogg_flac_pcm_stats(raw)
+        elif raw[:4] == b"FORM":
+            stats = aiff_pcm_stats(raw)
+        elif raw[:4] == b".snd":
+            stats = au_pcm_stats(raw)
+        elif raw[4:8] == b"ftyp":
+            stats = mp4_pcm_stats(raw)
+        else:
+            stats = wav_pcm_stats(raw)
+        if stats is None:
+            err = (
+                "unsupported audio payload (not PCM/float/"
+                "G.711/ADPCM WAV, AIFF, AU, or decodable "
+                "native/Ogg FLAC)"
+            )
+    except Exception as e:  # poison payloads quarantine
+        err = f"{type(e).__name__}: {e}"
+    yield {
+        "doc_id": str(doc_id),
+        "media_ref": str(media_ref),
+        "n_samples": int(stats["n_samples"]) if stats else None,
+        "rms": stats["rms"] if stats else None,
+        "peak": stats["peak"] if stats else None,
+        "mean": stats["mean"] if stats else None,
+        "error": err,
+    }
 
 
 def synthesize_wav_pcm_media(documents: DataFrame) -> DataFrame:
@@ -1305,61 +1283,51 @@ def extract_attachment_media(pdf_raw: DataFrame) -> DataFrame:
     the same sample-decode pipelines as standalone payloads.
     Quarantine contract: an unparseable document yields ONE row with
     the error set, never a dropped doc."""
+    return map_docs(pdf_raw, PDF_COLS, _attachment_media_rows,
+                    MEDIA_PAYLOAD_SCHEMA)
 
-    def sniff(raw: bytes) -> str:
-        if raw[:4] == b"RIFF":
-            if raw[8:12] == b"WAVE":
-                return "audio"
-            if raw[8:12] == b"AVI ":
-                return "video"
-        if (raw[:4] in (b"fLaC", b".snd", b"OggS")
-                or (raw[:4] == b"FORM"
-                    and raw[8:12] in (b"AIFF", b"AIFC"))):
+
+def _sniff_modality(raw: bytes) -> str:
+    if raw[:4] == b"RIFF":
+        if raw[8:12] == b"WAVE":
             return "audio"
-        if raw[4:8] == b"ftyp":
-            # ISO-BMFF carries either modality: route by the hdlr
-            # handler fourcc ('soun' tracks only -> audio)
-            return ("audio" if b"soun" in raw and b"vide" not in raw
-                    else "video")
-        if raw[:4] == b"\x1a\x45\xdf\xa3":
+        if raw[8:12] == b"AVI ":
             return "video"
-        if (raw[:3] == b"\xff\xd8\xff" or raw[:4] == b"\x89PNG"
-                or raw[:4] == b"GIF8"
-                or raw[:4] in (b"II*\x00", b"MM\x00*")):
-            return "image"
-        return "other"
+    if (raw[:4] in (b"fLaC", b".snd", b"OggS")
+            or (raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"))):
+        return "audio"
+    if raw[4:8] == b"ftyp":
+        # ISO-BMFF carries either modality: route by the hdlr handler
+        # fourcc ('soun' tracks only -> audio)
+        return ("audio" if b"soun" in raw and b"vide" not in raw
+                else "video")
+    if raw[:4] == b"\x1a\x45\xdf\xa3":
+        return "video"
+    if (raw[:3] == b"\xff\xd8\xff" or raw[:4] == b"\x89PNG"
+            or raw[:4] == b"GIF8"
+            or raw[:4] in (b"II*\x00", b"MM\x00*")):
+        return "image"
+    return "other"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.document import PdfDocument
 
-        cols = ("doc_id", "media_ref", "modality", "payload", "error")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                try:
-                    doc = PdfDocument(bytes(blob))
-                    for a in doc.attachments():
-                        data = a["data"]
-                        out["doc_id"].append(str(doc_id))
-                        out["media_ref"].append(a["filename"])
-                        out["modality"].append(
-                            sniff(data) if data else None)
-                        out["payload"].append(data)
-                        out["error"].append(
-                            None if data is not None
-                            else "undecodable attachment stream")
-                except Exception as exc:  # quarantine, never drop
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(None)
-                    out["modality"].append(None)
-                    out["payload"].append(None)
-                    out["error"].append(
-                        f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
+def _attachment_media_rows(doc_id, pdf_bytes):
+    from ..kernels.document import PdfDocument
 
-    return pdf_raw.select("doc_id", "pdf_bytes").mapInPandas(
-        gen, schema=MEDIA_PAYLOAD_SCHEMA
-    )
+    rows = []
+    try:
+        for a in PdfDocument(bytes(pdf_bytes)).attachments():
+            data = a["data"]
+            rows.append({
+                "doc_id": str(doc_id),
+                "media_ref": a["filename"],
+                "modality": _sniff_modality(data) if data else None,
+                "payload": data,
+                "error": (None if data is not None
+                          else "undecodable attachment stream"),
+            })
+    except Exception as exc:  # quarantine, never drop
+        rows.append(_quarantine_row(doc_id, exc))
+    return rows
 
 
 def synthesize_attachment_pdf_media(documents: DataFrame) -> DataFrame:
@@ -1418,50 +1386,42 @@ def extract_video_frame_features(media: DataFrame) -> DataFrame:
     (frame_idx, dims, mean luma). Undecodable payloads emit a
     single quarantine row with the error column set — never a raise,
     never a dropped doc (the extract_doc contract). Arrow-batched
-    mapInPandas; per-frame rows explode kernel-side so Spark never
+    map_docs lane; per-frame rows explode kernel-side so Spark never
     ships pixel arrays."""
+    return map_docs(media, MEDIA_COLS, _video_frame_rows, VIDEO_FRAME_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.media import (
-            avi_mjpeg_frames,
-            mkv_mjpeg_frames,
-            mp4_mjpeg_frames,
-        )
 
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_FRAME_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                frames, err = None, None
-                try:
-                    raw = bytes(payload)
-                    if raw[4:8] == b"ftyp":
-                        frames = mp4_mjpeg_frames(raw)
-                    elif raw[:4] == b"\x1a\x45\xdf\xa3":
-                        frames = mkv_mjpeg_frames(raw)
-                    else:
-                        frames = avi_mjpeg_frames(raw)
-                    if frames is None:
-                        err = ("unsupported video payload (not an AVI/"
-                               "MP4/MKV with decodable MJPEG frames)")
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                for row in (frames if frames else [None]):
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(str(media_ref))
-                    out["frame_idx"].append(
-                        row["frame_idx"] if row else None)
-                    out["width"].append(row["width"] if row else None)
-                    out["height"].append(row["height"] if row else None)
-                    out["mean_luma"].append(
-                        row["mean_luma"] if row else None)
-                    out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=VIDEO_FRAME_SCHEMA
+def _video_frame_rows(doc_id, media_ref, payload):
+    from ..kernels.media import (
+        avi_mjpeg_frames,
+        mkv_mjpeg_frames,
+        mp4_mjpeg_frames,
     )
+
+    frames, err = None, None
+    try:
+        raw = bytes(payload)
+        if raw[4:8] == b"ftyp":
+            frames = mp4_mjpeg_frames(raw)
+        elif raw[:4] == b"\x1a\x45\xdf\xa3":
+            frames = mkv_mjpeg_frames(raw)
+        else:
+            frames = avi_mjpeg_frames(raw)
+        if frames is None:
+            err = ("unsupported video payload (not an AVI/"
+                   "MP4/MKV with decodable MJPEG frames)")
+    except Exception as e:  # poison payloads quarantine
+        err = f"{type(e).__name__}: {e}"
+    for row in (frames if frames else [{}]):
+        yield {
+            "doc_id": str(doc_id),
+            "media_ref": str(media_ref),
+            "frame_idx": row.get("frame_idx"),
+            "width": row.get("width"),
+            "height": row.get("height"),
+            "mean_luma": row.get("mean_luma"),
+            "error": err,
+        }
 
 
 AUDIO_SEGMENT_SCHEMA = StructType(
@@ -1485,42 +1445,35 @@ def extract_audio_segments(media: DataFrame,
     segment with the exact-int stats contract — the audio analog of
     per-frame video rows, feeding windowed analytics (silence spans,
     loudness segmentation). Undecodable payloads emit a single
-    quarantine row; Arrow-batched mapInPandas, rows explode
+    quarantine row; Arrow-batched map_docs lane, rows explode
     kernel-side."""
+    return map_docs(media, MEDIA_COLS,
+                    partial(_audio_segment_rows,
+                            segment_samples=segment_samples),
+                    AUDIO_SEGMENT_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.media import wav_pcm_segment_stats
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_SEGMENT_SCHEMA.fields}
-            for doc_id, media_ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                segs, err = None, None
-                try:
-                    segs = wav_pcm_segment_stats(bytes(payload),
-                                                 segment_samples)
-                    if segs is None:
-                        err = ("unsupported audio payload (not a "
-                               "decodable WAV)")
-                except Exception as e:  # poison payloads quarantine
-                    err = f"{type(e).__name__}: {e}"
-                for st in (segs if segs else [None]):
-                    out["doc_id"].append(str(doc_id))
-                    out["media_ref"].append(str(media_ref))
-                    out["seg_idx"].append(
-                        st["seg_idx"] if st else None)
-                    out["n_samples"].append(
-                        int(st["n_samples"]) if st else None)
-                    out["rms"].append(st["rms"] if st else None)
-                    out["peak"].append(st["peak"] if st else None)
-                    out["mean"].append(st["mean"] if st else None)
-                    out["error"].append(err)
-            yield pd.DataFrame(out)
+def _audio_segment_rows(doc_id, media_ref, payload, segment_samples):
+    from ..kernels.media import wav_pcm_segment_stats
 
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        gen, schema=AUDIO_SEGMENT_SCHEMA
-    )
+    segs, err = None, None
+    try:
+        segs = wav_pcm_segment_stats(bytes(payload), segment_samples)
+        if segs is None:
+            err = "unsupported audio payload (not a decodable WAV)"
+    except Exception as e:  # poison payloads quarantine
+        err = f"{type(e).__name__}: {e}"
+    for st in (segs if segs else [None]):
+        yield {
+            "doc_id": str(doc_id),
+            "media_ref": str(media_ref),
+            "seg_idx": st["seg_idx"] if st else None,
+            "n_samples": int(st["n_samples"]) if st else None,
+            "rms": st["rms"] if st else None,
+            "peak": st["peak"] if st else None,
+            "mean": st["mean"] if st else None,
+            "error": err,
+        }
 
 
 def detect_silence_spans(segments: DataFrame,

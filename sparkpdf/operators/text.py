@@ -7,8 +7,16 @@ document fingerprinting — all pure pyspark.sql.functions expressions
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernels.html import extract_main_html, parse_web_doc, parse_webpage
+from ..kernels.robots import (
+    crawl_delay, is_allowed, parse_robots, synthesize_robots)
+from ..kernels.sitemap import parse_sitemap, synthesize_sitemap
+from .adapter import map_docs
 
 # small public stopword lists (enough for a deterministic heuristic)
 STOPWORDS = {
@@ -327,6 +335,7 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
 
 
 HTML_MAIN_SCHEMA = "doc_id string, title string, main_text string"
+HTML_COLS = ("doc_id", "html")
 
 
 def synthesize_html_corpus(documents: DataFrame) -> DataFrame:
@@ -356,34 +365,23 @@ def synthesize_html_corpus(documents: DataFrame) -> DataFrame:
     )
 
 
+def _html_main_row(doc_id, html):
+    try:
+        res = extract_main_html(html if html is not None else "")
+    except Exception:
+        res = {"title": None, "main_text": None}
+    yield {
+        "doc_id": str(doc_id),
+        "title": res["title"],
+        "main_text": res["main_text"],
+    }
+
+
 def extract_html_main(pages: DataFrame) -> DataFrame:
     """(doc_id, html) -> (doc_id, title, main_text): boilerplate strip
     via the DOM-walk heuristics in kernels/html.py. Poison inputs
     quarantine to NULLs (same discipline as PDF extraction)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.html import extract_main_html
-
-        for pdf in batches:
-            out = {"doc_id": [], "title": [], "main_text": []}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                try:
-                    res = extract_main_html(
-                        html_text if html_text is not None else ""
-                    )
-                except Exception:
-                    res = {"title": None, "main_text": None}
-                out["doc_id"].append(str(doc_id))
-                out["title"].append(res["title"])
-                out["main_text"].append(res["main_text"])
-            yield pd.DataFrame(out)
-
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=HTML_MAIN_SCHEMA
-    )
+    return map_docs(pages, HTML_COLS, _html_main_row, HTML_MAIN_SCHEMA)
 
 
 WEB_FEATURES_SCHEMA = (
@@ -539,6 +537,18 @@ def synthesize_warc_mixed_corpus(documents: DataFrame) -> DataFrame:
     )
 
 
+def _web_features_row(doc_id, html):
+    try:
+        res = parse_webpage(html if html is not None else "")
+        err = None
+    except Exception as exc:  # quarantine, never raise
+        res = {}
+        err = f"{type(exc).__name__}: {exc}"
+    # parse_webpage's keys are the schema's field names; its link/
+    # heading/table/section dicts are the struct rows as they are
+    yield {**res, "doc_id": str(doc_id), "error": err}
+
+
 def extract_web_features(pages: DataFrame) -> DataFrame:
     """(doc_id, html) -> one row per doc with the full DOM feature
     set: page metadata scalars (lang/title/canonical/description/
@@ -547,56 +557,11 @@ def extract_web_features(pages: DataFrame) -> DataFrame:
     inputs quarantine via the error column — never raises, never
     drops rows (the extract_doc discipline).
 
-    Scale shape: ONE mapInPandas pass, no shuffle; downstream
+    Scale shape: ONE Python map pass, no shuffle; downstream
     link/heading/table queries explode map-side. At 10^12 docs this
     is the crawl-graph feeder (outlinks -> anchor-text corpus +
     URL frontier), so everything stays in the one Arrow batch walk."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.html import parse_webpage
-
-        cols = ("lang", "title", "canonical", "description", "robots",
-                "og_title", "charset")
-
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id",) + cols + ("links", "headings",
-                                         "tables", "sections",
-                                         "error")}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                out["doc_id"].append(str(doc_id))
-                try:
-                    res = parse_webpage(
-                        html_text if html_text is not None else ""
-                    )
-                    err = None
-                except Exception as exc:  # quarantine, never raise
-                    res = None
-                    err = f"{type(exc).__name__}: {exc}"
-                for k in cols:
-                    out[k].append(res[k] if res else None)
-                out["links"].append(
-                    [(l["href"], l["anchor"], l["nofollow"],
-                      l["boiler"]) for l in res["links"]]
-                    if res else None)
-                out["headings"].append(
-                    [(h["level"], h["text"], h["boiler"])
-                     for h in res["headings"]] if res else None)
-                out["tables"].append(
-                    [(t["n_rows"], t["n_cols"], t["cells"])
-                     for t in res["tables"]] if res else None)
-                out["sections"].append(
-                    [(s["heading"], s["level"], s["text"])
-                     for s in res["sections"]] if res else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=WEB_FEATURES_SCHEMA
-    )
+    return map_docs(pages, HTML_COLS, _web_features_row, WEB_FEATURES_SCHEMA)
 
 
 WEB_DOC_SCHEMA = (
@@ -611,9 +576,25 @@ WEB_DOC_SCHEMA = (
 )
 
 
+def _web_doc_row(doc_id, html):
+    raw = html if html is not None else ""
+    n_bytes = len(raw.encode("utf-8"))
+    try:
+        # one tokenization feeds both parsers (round 9)
+        main, feats = parse_web_doc(raw)
+        err = None
+    except Exception as exc:  # quarantine, never raise
+        main = feats = {}
+        err = f"{type(exc).__name__}: {exc}"[:500]
+    # title and the metadata/link/heading/table fields come from the
+    # feature parse, main_text from the main-content parse
+    yield {**feats, "main_text": main.get("main_text"),
+           "doc_id": str(doc_id), "n_bytes": n_bytes, "error": err}
+
+
 def extract_web_docs(pages: DataFrame) -> DataFrame:
     """The production HTML lane (jobs/web_job.py): main-content strip
-    AND the full DOM feature set in ONE mapInPandas pass over the
+    AND the full DOM feature set in ONE Python map pass over the
     corpus — per doc: title + boilerplate-stripped main_text
     (extract_main_html), metadata scalars, outlinks, heading outline,
     table shapes (parse_webpage), plus n_bytes (utf-8 size of the raw
@@ -622,53 +603,21 @@ def extract_web_docs(pages: DataFrame) -> DataFrame:
 
     Scale shape: one corpus read, no shuffle; the checkpoint layer
     slices by doc_id hash and records per-partition lineage."""
-    from typing import Iterator
+    return map_docs(pages, HTML_COLS, _web_doc_row, WEB_DOC_SCHEMA)
 
-    import pandas as pd
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.html import parse_web_doc
-
-        meta_cols = ("lang", "canonical", "description", "robots",
-                     "og_title", "charset")
-
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "title", "main_text") + meta_cols
-                   + ("links", "headings", "tables", "n_bytes",
-                      "error")}
-            for doc_id, html_text in zip(pdf["doc_id"], pdf["html"]):
-                raw = html_text if html_text is not None else ""
-                out["doc_id"].append(str(doc_id))
-                out["n_bytes"].append(len(raw.encode("utf-8")))
-                try:
-                    # one tokenization feeds both parsers (round 9)
-                    main, feats = parse_web_doc(raw)
-                    err = None
-                except Exception as exc:  # quarantine, never raise
-                    main = feats = None
-                    err = f"{type(exc).__name__}: {exc}"[:500]
-                out["title"].append(feats["title"] if feats else None)
-                out["main_text"].append(
-                    main["main_text"] if main else None)
-                for k in meta_cols:
-                    out[k].append(feats[k] if feats else None)
-                out["links"].append(
-                    [(l["href"], l["anchor"], l["nofollow"],
-                      l["boiler"]) for l in feats["links"]]
-                    if feats else None)
-                out["headings"].append(
-                    [(h["level"], h["text"], h["boiler"])
-                     for h in feats["headings"]] if feats else None)
-                out["tables"].append(
-                    [(t["n_rows"], t["n_cols"], t["cells"])
-                     for t in feats["tables"]] if feats else None)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return pages.select("doc_id", "html").mapInPandas(
-        gen, schema=WEB_DOC_SCHEMA
-    )
+def _robots_row(doc_id, agent, probe_paths):
+    d = int(doc_id)
+    r = parse_robots(synthesize_robots(d))
+    row = {
+        "doc_id": d,
+        "crawl_delay": crawl_delay(r, agent),
+        "n_sitemaps": len(r["sitemaps"]),
+        "other_agent_tmp": int(is_allowed(r, "otherbot", "/tmp/x")),
+    }
+    for i, p in enumerate(probe_paths):
+        row[f"allowed_{i}"] = int(is_allowed(r, agent, p))
+    yield row
 
 
 def extract_robots_rules(documents: DataFrame,
@@ -679,80 +628,44 @@ def extract_robots_rules(documents: DataFrame,
     the synthesized per-doc robots.txt and emit the crawl-policy
     signals a frontier needs — crawl delay, sitemap count, and the
     allow/deny decision for each probe path under `agent` plus the
-    '*'-group decision an unknown agent would get. One mapInPandas
+    '*'-group decision an unknown agent would get. One Python map
     pass, no shuffle; at crawl scale this joins (broadcast) against
     the per-host frontier."""
-    from typing import Iterator
-
-    import pandas as pd
-
     n_parts = documents.sparkSession.sparkContext.defaultParallelism
     ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-    probe_cols = [f"allowed_{i}" for i in range(len(probe_paths))]
     schema = ("doc_id long, crawl_delay double, n_sitemaps int, "
-              + ", ".join(f"{c} int" for c in probe_cols)
+              + ", ".join(f"allowed_{i} int" for i in range(len(probe_paths)))
               + ", other_agent_tmp int")
+    row_fn = partial(_robots_row, agent=agent, probe_paths=probe_paths)
+    return map_docs(ids.repartition(n_parts, "doc_id"), ["doc_id"], row_fn,
+                    schema)
 
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.robots import (
-            crawl_delay, is_allowed, parse_robots, synthesize_robots)
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ["doc_id", "crawl_delay", "n_sitemaps"]
-                   + probe_cols + ["other_agent_tmp"]}
-            for (doc_id,) in zip(pdf["doc_id"]):
-                d = int(doc_id)
-                r = parse_robots(synthesize_robots(d))
-                out["doc_id"].append(d)
-                out["crawl_delay"].append(crawl_delay(r, agent))
-                out["n_sitemaps"].append(len(r["sitemaps"]))
-                for c, p in zip(probe_cols, probe_paths):
-                    out[c].append(int(is_allowed(r, agent, p)))
-                out["other_agent_tmp"].append(
-                    int(is_allowed(r, "otherbot", "/tmp/x")))
-            yield pd.DataFrame(out)
-
-    return ids.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema=schema
-    )
+def _sitemap_rows(doc_id):
+    d = int(doc_id)
+    r = parse_sitemap(synthesize_sitemap(d))
+    for i, e in enumerate(r["entries"]):
+        yield {
+            "doc_id": d,
+            "entry_idx": i,
+            "kind": r["kind"],
+            "loc": e.get("loc"),
+            "lastmod": e.get("lastmod"),
+            "priority": e.get("priority"),
+        }
 
 
 def extract_sitemap_entries(documents: DataFrame) -> DataFrame:
     """Per-doc sitemap parse (kernels/sitemap.py): one row per
     <url>/<sitemap> entry with the container kind — the crawl
-    frontier's seed stream. One mapInPandas pass, entry explode
+    frontier's seed stream. One Python map pass, entry explode
     Python-side (entries per sitemap are tiny); no shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
     n_parts = documents.sparkSession.sparkContext.defaultParallelism
     ids = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     schema = ("doc_id long, entry_idx int, kind string, loc string, "
               "lastmod string, priority string")
-
-    def gen(batches: "Iterator[pd.DataFrame]"):
-        from ..kernels.sitemap import parse_sitemap, synthesize_sitemap
-
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "entry_idx", "kind",
-                                   "loc", "lastmod", "priority")}
-            for (doc_id,) in zip(pdf["doc_id"]):
-                d = int(doc_id)
-                r = parse_sitemap(synthesize_sitemap(d))
-                for i, e in enumerate(r["entries"]):
-                    out["doc_id"].append(d)
-                    out["entry_idx"].append(i)
-                    out["kind"].append(r["kind"])
-                    out["loc"].append(e.get("loc"))
-                    out["lastmod"].append(e.get("lastmod"))
-                    out["priority"].append(e.get("priority"))
-            yield pd.DataFrame(out)
-
-    return ids.repartition(n_parts, "doc_id").mapInPandas(
-        gen, schema=schema
-    )
+    return map_docs(ids.repartition(n_parts, "doc_id"), ["doc_id"],
+                    _sitemap_rows, schema)
 
 
 def canonical_url(col) -> "F.Column":

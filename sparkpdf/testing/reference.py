@@ -9,22 +9,33 @@ from __future__ import annotations
 
 import importlib.util
 import io
+import os
 import sys
-from typing import Optional
 
 _REF_INIT = "/root/reference/__init__.py"
 _REF_DIR = "/root/reference"
 
 
 def load_reference():
+    """The reference package, imported once as "PyPDF2". Raises
+    FileNotFoundError, on every call, while the reference tree is
+    absent, and leaves no half-initialised module behind on failure."""
     if "PyPDF2" in sys.modules:
         return sys.modules["PyPDF2"]
+    if not os.path.isfile(_REF_INIT):
+        raise FileNotFoundError(f"reference tree not found at {_REF_DIR}")
     spec = importlib.util.spec_from_file_location(
         "PyPDF2", _REF_INIT, submodule_search_locations=[_REF_DIR]
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["PyPDF2"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        for name in [n for n in sys.modules
+                     if n == "PyPDF2" or n.startswith("PyPDF2.")]:
+            del sys.modules[name]
+        raise
     # xmp.py imports PyPDF2.utils, which only exists as the _utils alias
     if "PyPDF2._utils" in sys.modules:
         sys.modules.setdefault("PyPDF2.utils", sys.modules["PyPDF2._utils"])
@@ -56,10 +67,3 @@ def reference_extract(pdf_bytes: bytes) -> dict:
             out["texts"].append(None)
             out["errors"].append(f"{type(exc).__name__}: {exc}")
     return out
-
-
-def reference_docinfo(pdf_bytes: bytes) -> Optional[dict]:
-    ref = load_reference()
-    r = ref.PdfFileReader(io.BytesIO(pdf_bytes), strict=False)
-    info = r.getDocumentInfo()
-    return dict(info) if info is not None else None
